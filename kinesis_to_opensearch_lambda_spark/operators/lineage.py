@@ -22,9 +22,10 @@ parameter, not a docstring promise.
 from __future__ import annotations
 
 import os
-import re
 
 from pyspark.sql import DataFrame
+
+from ..session import parse_bytes
 
 # Deployment-level override: when a caller passes checkpoint_dir=None
 # (every registered query builder does — the registry signature is
@@ -74,45 +75,32 @@ def truncate_lineage(
 # heap/64 with the measured ~6-12x deserialized-object blowup over
 # source parquet bytes and up to 3 live cuts per query keeps the
 # materialized mass comfortably under half the heap.
-_CUT_BUDGET_ENV = "SPARK_GRAFT_LINEAGE_CUT_MAX_MB"
 _CUT_HEAP_FRACTION = 64
 
 
 def _heap_bytes(df: DataFrame) -> int:
     """Heap of the JVM that will hold localCheckpoint blocks.
 
-    Under a ``local[*]`` master the executor IS the driver JVM, so the
-    budget must come from ``spark.driver.memory`` even when a
-    cluster-style conf also sets ``spark.executor.memory`` (r13 ADVICE:
+    Under a ``local`` / ``local[N]`` master the executor IS the driver
+    JVM, so the budget must come from ``spark.driver.memory`` even when
+    a cluster-style conf also sets ``spark.executor.memory`` (r13 ADVICE:
     preferring the executor value unconditionally would size the budget
     from the wrong — typically larger — heap and re-admit the sf10 OOM
-    this guard exists to prevent).  Spark memory strings allow an
-    optional trailing 'b' ('512mb', '16gb'); any unparseable value
-    degrades to the conservative 1g default instead of raising.
+    this guard exists to prevent).  ``local-cluster[...]`` runs separate
+    executor JVMs, so it sizes from the executor heap like a cluster.
+    Any unparseable value degrades to the conservative 1g default
+    instead of raising.
     """
     conf = df.sparkSession.sparkContext.getConf()
-    if conf.get("spark.master", "").startswith("local"):
+    master = conf.get("spark.master", "")
+    if master == "local" or master.startswith("local["):
         raw = conf.get("spark.driver.memory", None) or "1g"
     else:
         raw = conf.get("spark.executor.memory", None) or conf.get(
             "spark.driver.memory", "1g"
         )
-    parsed = _parse_mem(raw)
+    parsed = parse_bytes(raw)
     return parsed if parsed is not None else 1 << 30
-
-
-def _parse_mem(raw: str) -> int | None:
-    """Spark memory string → bytes, or None when unparseable.  Accepts
-    the JVM forms Spark does: bare bytes ('1073741824'), single-letter
-    suffixes ('16g'), and two-letter suffixes ('512mb', '16gb')."""
-    m = re.fullmatch(r"([\d.]+)([kmgt]?)b?", raw.strip().lower())
-    if m is None:
-        return None
-    units = {"": 0, "k": 10, "m": 20, "g": 30, "t": 40}
-    try:
-        return int(float(m.group(1)) * (1 << units[m.group(2)]))
-    except ValueError:
-        return None
 
 
 def _scan_bytes(source: DataFrame) -> int:
@@ -127,8 +115,7 @@ def _scan_bytes(source: DataFrame) -> int:
     intended safe direction, and the serialized tier below still
     applies only when bytes are known; real cluster deployments should
     set ``$SPARK_GRAFT_CHECKPOINT_DIR`` (reliable checkpoints always
-    cut, blocks on a fault-tolerant FS) or pin an explicit budget via
-    ``$SPARK_GRAFT_LINEAGE_CUT_MAX_MB`` after sizing their executors.
+    cut, blocks on a fault-tolerant FS).
     Resolving non-file schemes through the Hadoop FileSystem API is
     possible but adds a py4j round-trip per file to a path whose
     cluster story is the checkpoint dir anyway.
@@ -159,7 +146,6 @@ def _scan_bytes(source: DataFrame) -> int:
 # stays UNCUT, failing safe exactly as before: a 100 TB input must not
 # be copied onto executor-local disks as a side effect of planning
 # hygiene.
-_SER_BUDGET_ENV = "SPARK_GRAFT_LINEAGE_SER_MAX_MB"
 
 
 def truncate_lineage_scaled(
@@ -181,11 +167,9 @@ def truncate_lineage_scaled(
       calling query; default 3, the budget's original assumption —
       r13 ADVICE: k-core holds 4 live edge-scale cuts, BFS up to 8
       node-scale ones, so a flat divisor overshot the margin).
-      Override: $SPARK_GRAFT_LINEAGE_CUT_MAX_MB (absolute, per cut).
-    - Over that but under the serialized budget (source scan <= heap,
-      override $SPARK_GRAFT_LINEAGE_SER_MAX_MB): cut with
-      MEMORY_AND_DISK_SER storage — compact serialized blocks that
-      spill to disk, keeping the planning/broadcast dedup the cut buys
+    - Over that but under the serialized budget (source scan <= heap):
+      cut with MEMORY_AND_DISK_SER storage — compact serialized blocks
+      that spill to disk, keeping the planning/broadcast dedup the cut buys
       without the deserialized-row heap storm (r13's sf10 OOM).
     - Above both (or unknowable mass): ``df`` is returned UNCUT —
       results are identical either way (a cut never changes
@@ -207,21 +191,13 @@ def truncate_lineage_scaled(
         checkpoint_dir = os.environ.get(CHECKPOINT_DIR_ENV) or None
     if checkpoint_dir is not None:
         return truncate_lineage(df, checkpoint_dir, eager=eager)
-    env = os.environ.get(_CUT_BUDGET_ENV)
     heap = _heap_bytes(df)
-    budget = (
-        int(float(env) * (1 << 20))
-        if env
-        else heap * 3 // (_CUT_HEAP_FRACTION * max(1, live_cuts))
-    )
     scan = _scan_bytes(source)
-    if scan <= budget:
+    if scan <= heap * 3 // (_CUT_HEAP_FRACTION * max(1, live_cuts)):
         return truncate_lineage(df, None, eager=eager)
     if not serialized_tier:
         return df
-    ser_env = os.environ.get(_SER_BUDGET_ENV)
-    ser_budget = int(float(ser_env) * (1 << 20)) if ser_env else heap
-    if scan <= ser_budget:
+    if scan <= heap:
         from pyspark import StorageLevel
 
         # PySpark's MEMORY_AND_DISK is the SERIALIZED level (JVM

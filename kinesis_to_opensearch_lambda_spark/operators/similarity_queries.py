@@ -1301,14 +1301,8 @@ def _srp_index_buckets(spark: SparkSession) -> int:
     parallelism on a 32-core session (and would do the same on a
     1000-core cluster).  Default: the session's defaultParallelism,
     floored at 8 — scale-adaptive in the guide §2 sense (the layout
-    tracks the compute width it feeds).  $SPARK_GRAFT_SRP_BUCKETS
-    overrides for deployments that pin a layout.  Storage bucketing is
-    pure layout: results are bucket-count-invariant (oracle-checked)."""
-    import os
-
-    env = os.environ.get("SPARK_GRAFT_SRP_BUCKETS")
-    if env:
-        return max(1, int(env))
+    tracks the compute width it feeds).  Storage bucketing is pure
+    layout: results are bucket-count-invariant (oracle-checked)."""
     return max(8, spark.sparkContext.defaultParallelism)
 
 

@@ -16,6 +16,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 
 from ..queries import register
+from ..session import parse_bytes, scoped_conf
 from ..sinks import OpenSearchBulkSink, SplunkHECSink, SpoolDirTransport
 from ..sources.batch import fan_out, load_table
 from ..sources.kinesis import audit_events_from_events, kinesis_envelope, read_envelope_stream
@@ -125,22 +126,45 @@ def _write_mtime_batches(
     return src
 
 
-class _stream_shuffle_width:
-    """Scope the stateful-shuffle width of a streaming query to its
-    micro-batch byte mass (guide §2: derive partition counts from input
-    size, never from a constant tuned to one box).
+def dir_bytes(path: str) -> int:
+    """Total bytes of the files under ``path`` (unreadable files count 0).
+
+    Deployment seam (r13 verdict): this stats a LOCAL directory — here
+    always a tempdir of the calling query, since the streaming operators
+    fabricate their own micro-batch sources.  A deployment whose stream
+    source is remote (Kafka, a cloud bucket) cannot stat it this way
+    and passes ``width=`` to ``_drain_conf`` from its own throughput
+    knowledge instead, which never walks."""
+    import os
+
+    total = 0
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            try:
+                total += os.path.getsize(os.path.join(root, f))
+            except OSError:
+                pass
+    return total
+
+
+# Per-task byte mass below which a streaming drain is "micro-batch
+# scale" (guide §2: derive layout from input size, never from a
+# constant tuned to one box).
+_STREAM_TASK_BYTES = 64 << 20
+
+
+def _shuffle_width(total_bytes: int, session_width: int) -> int:
+    """Stateful-shuffle width of a streaming drain: ceil(source bytes /
+    64 MB) clamped to [1, session width] — a 100 TB firehose keeps the
+    session width, the test corpus gets 1.
 
     ``spark.sql.shuffle.partitions`` at stream start fixes the state
     store partition count for the life of the checkpoint.  The session
     default (sized for the BATCH join fleet) hands a kilobyte-scale
     micro-batch 32 state stores: 32 store commits + 32 Python workers
-    per trigger of pure overhead.  Width here = ceil(source bytes /
-    64 MB) clamped to [1, session default] — a 100 TB firehose keeps
-    the session width, the test corpus gets 1 — overridable via
-    $SPARK_GRAFT_STREAM_SHUFFLE for deployments that pin their own.
-    Restored after the drain; correctness is partition-count-invariant
-    (state logic is per-key; asserted by the oracle parity at any
-    width).
+    per trigger of pure overhead.  Correctness is partition-count-
+    invariant (state logic is per-key; asserted by the oracle parity at
+    any width).
 
     Applies to JVM-stateful aggregations (streaming groupBy/agg), whose
     per-partition cost is store-commit overhead, AND — since the r13
@@ -149,54 +173,14 @@ class _stream_shuffle_width:
     invocation no longer forces the full session width (pre-bucketing,
     per-band-value grouping measured 4x slower at width 1; post, the
     r13 width sweep on streaming_dedup_minhash reads 32/16/8/4 ->
-    5.9/4.2/4.0/3.9 s at sf0.1 — store commits dominate).
-
-    Deployment seam (r13 verdict): the byte probe ``os.walk``s the
-    source dir, which is always a builder-owned LOCAL tempdir here (the
-    streaming operators fabricate their own micro-batch sources).  A
-    deployment whose stream source is remote (Kafka, a cloud bucket)
-    cannot stat it this way — pin ``$SPARK_GRAFT_STREAM_SHUFFLE`` (or
-    pass ``width=``) from its own throughput knowledge instead; the
-    env pin is checked first precisely so that path never walks."""
-
-    def __init__(self, spark: SparkSession, src_dir: str, width: int | None = None):
-        import os
-
-        self.spark = spark
-        env = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE")
-        self.prev = spark.conf.get("spark.sql.shuffle.partitions")
-        if env is not None:
-            self.width = max(1, int(env))
-            return
-        if width is not None:
-            # caller-derived width (e.g. the stream-stream join derives
-            # it from the candidate-pair mass, not the source bytes —
-            # its dominant cost is join-output generation); still
-            # clamped to the session width and env-overridable above
-            self.width = max(1, min(int(self.prev), int(width)))
-            return
-        total = 0
-        for root, _dirs, files in os.walk(src_dir):
-            for f in files:
-                try:
-                    total += os.path.getsize(os.path.join(root, f))
-                except OSError:
-                    pass
-        self.width = max(1, min(int(self.prev), -(-total // (64 << 20))))
-
-    def __enter__(self):
-        self.spark.conf.set("spark.sql.shuffle.partitions", str(self.width))
-        return self
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
-        return False
+    5.9/4.2/4.0/3.9 s at sf0.1 — store commits dominate)."""
+    return max(1, min(session_width, -(-total_bytes // _STREAM_TASK_BYTES)))
 
 
-class _stream_codegen_mode:
-    """Scope ``spark.sql.codegen.factoryMode`` to NO_CODEGEN for a
-    micro-batch drain whose aggregation buffer is very wide and whose
-    per-trigger row mass is small (guide §1.2 step 2 — per-task work).
+def _codegen_mode(total_bytes: int, session_mode: str) -> str:
+    """``spark.sql.codegen.factoryMode`` for a drain whose aggregation
+    buffer is very wide: NO_CODEGEN below 64 MB of source per drain,
+    else the session's mode (guide §1.2 step 2 — per-task work).
 
     approx_count_distinct(rsd=0.005) carries a 4,330-word HLL++ buffer,
     i.e. a 4,330-attribute aggregation schema.  Under the default
@@ -208,87 +192,62 @@ class _stream_codegen_mode:
     per trigger while state-store commits take 40 ms).  Interpreted
     projections skip source generation entirely; for a kilobyte-scale
     micro-batch the per-row interpretation penalty is noise next to
-    the fixed codegen cost (measured at sf0.1: drain 27 s -> 11 s).
-
-    The flip is byte-derived like ``_stream_shuffle_width``: only a
-    source below 64 MB per the whole drain gets NO_CODEGEN — a 100 TB
-    firehose batch keeps codegen, whose per-row wins then dominate the
-    fixed source-generation cost.  ``$SPARK_GRAFT_STREAM_CODEGEN``
-    (``FALLBACK`` / ``NO_CODEGEN`` / ``CODEGEN_ONLY``) pins deployments
-    that want their own.  Restored after the drain; projection mode is
-    pure execution strategy (results bit-identical — the HLL++ update
-    and merge are the same imperative algorithm either way)."""
-
-    def __init__(self, spark: SparkSession, src_dir: str):
-        import os
-
-        self.spark = spark
-        self.prev = spark.conf.get(
-            "spark.sql.codegen.factoryMode", "FALLBACK"
-        )
-        env = os.environ.get("SPARK_GRAFT_STREAM_CODEGEN")
-        if env:
-            self.mode = env
-            return
-        total = 0
-        for root, _dirs, files in os.walk(src_dir):
-            for f in files:
-                try:
-                    total += os.path.getsize(os.path.join(root, f))
-                except OSError:
-                    pass
-        self.mode = "NO_CODEGEN" if total < (64 << 20) else self.prev
-
-    def __enter__(self):
-        self.spark.conf.set("spark.sql.codegen.factoryMode", self.mode)
-        return self
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.codegen.factoryMode", self.prev)
-        return False
+    the fixed codegen cost (measured at sf0.1: drain 27 s -> 11 s).  A
+    100 TB firehose batch keeps codegen, whose per-row wins then
+    dominate the fixed source-generation cost.  Projection mode is pure
+    execution strategy (results bit-identical — the HLL++ update and
+    merge are the same imperative algorithm either way)."""
+    return "NO_CODEGEN" if total_bytes < _STREAM_TASK_BYTES else session_mode
 
 
-class _stream_scan_split:
-    """Scope ``spark.sql.files.maxPartitionBytes`` so ONE micro-batch's
-    source files spread across the session's cores (guide §6: input
-    split size is the scan-parallelism dial).
+def _scan_split(
+    total_bytes: int, n_batches: int, cores: int, session_split: int
+) -> int:
+    """``spark.sql.files.maxPartitionBytes`` that spreads ONE micro-batch's
+    source files across the session's cores (guide §6: input split size
+    is the scan-parallelism dial): max(1 MB, per-batch bytes / cores),
+    never above the session value.
 
     A micro-batch trigger reads only its own few files; with the batch
     mass far below the session's (batch-fleet-sized) 128 MB split, the
     whole trigger bin-packs into one task and the per-row scan-stage
-    work (minhash shingling here) runs single-core.  Split size here =
-    max(1 MB, per-batch bytes / defaultParallelism), never raised above
-    the session value — a 100 TB firehose batch keeps the session's
-    split size, the test corpus splits per-file.  Restored after the
-    drain; split size is pure scan layout (results invariant).
-    """
+    work (minhash shingling here) runs single-core.  A 100 TB firehose
+    batch keeps the session's split size, the test corpus splits
+    per-file.  Split size is pure scan layout (results invariant)."""
+    per = max(1 << 20, -(-total_bytes // max(1, n_batches) // max(1, cores)))
+    return min(session_split, per)
 
-    def __init__(self, spark: SparkSession, src_dir: str, n_batches: int):
-        import os
 
-        self.spark = spark
-        self.prev = spark.conf.get(
-            "spark.sql.files.maxPartitionBytes", "134217728"
+def _drain_conf(
+    spark: SparkSession,
+    src_dir: str,
+    width: int | None = None,
+    codegen: bool = False,
+    n_batches: int = 0,
+) -> dict[str, str]:
+    """Runtime conf for one scoped availableNow drain (see
+    ``session.scoped_conf``), derived from ``src_dir``'s bytes in one
+    walk: the shuffle width always, the codegen mode when ``codegen``,
+    the scan split when ``n_batches`` is given.  A caller-derived
+    ``width`` is only clamped to [1, session width] and skips the walk."""
+    conf = spark.conf
+    session_w = int(conf.get("spark.sql.shuffle.partitions"))
+    if width is not None:
+        return {"spark.sql.shuffle.partitions": str(max(1, min(session_w, width)))}
+    total = dir_bytes(src_dir)
+    out = {"spark.sql.shuffle.partitions": str(_shuffle_width(total, session_w))}
+    if codegen:
+        session_mode = conf.get("spark.sql.codegen.factoryMode", "FALLBACK")
+        out["spark.sql.codegen.factoryMode"] = _codegen_mode(total, session_mode)
+    if n_batches:
+        cores = spark.sparkContext.defaultParallelism
+        session_split = parse_bytes(
+            conf.get("spark.sql.files.maxPartitionBytes", "134217728")
         )
-        prev_bytes = int("".join(c for c in self.prev if c.isdigit()))
-        total = 0
-        for root, _dirs, files in os.walk(src_dir):
-            for f in files:
-                try:
-                    total += os.path.getsize(os.path.join(root, f))
-                except OSError:
-                    pass
-        width = max(1, spark.sparkContext.defaultParallelism)
-        per = max(1 << 20, -(-total // max(1, n_batches) // width))
-        self.val = str(min(prev_bytes, per))
-
-    def __enter__(self):
-        self.spark.conf.set("spark.sql.files.maxPartitionBytes", self.val)
-        return self
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.files.maxPartitionBytes", self.prev)
-        return False
+        out["spark.sql.files.maxPartitionBytes"] = str(
+            _scan_split(total, n_batches, cores, session_split)
+        )
+    return out
 
 
 @register(
@@ -569,7 +528,7 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         # sides are known from the already-materialized ids.count().
         pair_mass = (n_events // 3) ** 2 // key_mod
         ssj_width = -(-pair_mass // 1_000_000)
-        with _stream_shuffle_width(spark, d, width=ssj_width):
+        with scoped_conf(spark, _drain_conf(spark, d, width=ssj_width)):
             q = (
                 joined.select("its")
                 .writeStream.outputMode("append")
@@ -1308,8 +1267,8 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         name = f"sess_{uuid.uuid4().hex[:12]}"
         # JVM-stateful session-window aggregate: per-partition
         # store-commit overhead dominates at micro-batch scale, so the
-        # width derives from source bytes (see _stream_shuffle_width)
-        with _stream_shuffle_width(spark, src):
+        # width derives from source bytes (see _shuffle_width)
+        with scoped_conf(spark, _drain_conf(spark, src)):
             q = (
                 agg.writeStream.outputMode("append")
                 .format("memory")
@@ -1428,9 +1387,9 @@ def streaming_sketch_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         # additionally makes FALLBACK-mode projection codegen regenerate
         # megabytes of Java source per task per trigger (~5 s/trigger of
         # pure source formatting at any row count — see
-        # _stream_codegen_mode); interpreted projections cut the drain
+        # _codegen_mode); interpreted projections cut the drain
         # 27 s -> 11 s at sf0.1 with bit-identical results.
-        with _stream_shuffle_width(spark, src), _stream_codegen_mode(spark, src):
+        with scoped_conf(spark, _drain_conf(spark, src, codegen=True)):
             q = (
                 agg.writeStream.outputMode("append")
                 .format("memory")
@@ -1546,7 +1505,7 @@ def streaming_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Each batch lands as w files (not one): the per-row shingle +
         # minhash fold — the dominant per-trigger cost — runs in the
         # SCAN stage, and a single-file batch pins that whole stage to
-        # one task (see _stream_scan_split).
+        # one task (see _scan_split).
         w = max(1, min(8, spark.sparkContext.defaultParallelism))
         src = _write_mtime_batches(
             corpus,
@@ -1571,9 +1530,7 @@ def streaming_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         # frames per trigger instead of O(band vocabulary); verdicts
         # are computed per band value inside the bucket, so results
         # are bucket-count-invariant (see streaming.stateful).
-        with _stream_scan_split(spark, src, 3), _stream_shuffle_width(
-            spark, src
-        ):
+        with scoped_conf(spark, _drain_conf(spark, src, n_batches=3)):
             q = (
                 band_first_seen(bands.select("doc_id", "band_idx", "band_val"))
                 .writeStream.outputMode("update")
@@ -1687,7 +1644,7 @@ def streaming_quality_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         name = f"qf_{uuid.uuid4().hex[:12]}"
-        with _stream_shuffle_width(spark, src):
+        with scoped_conf(spark, _drain_conf(spark, src)):
             q = (
                 agg.writeStream.outputMode("update")
                 .format("memory")

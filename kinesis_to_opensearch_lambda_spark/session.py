@@ -15,10 +15,47 @@ logical plans are the ones we'd want on a 1000-executor cluster:
 from __future__ import annotations
 
 import os
+import re
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "8")
+
+_BYTES_RE = re.compile(r"(\d+(?:\.\d+)?)([kmgtp]?)b?")
+_BYTES_SHIFT = {"": 0, "k": 10, "m": 20, "g": 30, "t": 40, "p": 50}
+
+
+def parse_bytes(raw: str) -> int | None:
+    """Spark byte-size string -> bytes, or None when unparseable.
+
+    Accepts the JVM forms Spark does: bare bytes ('134217728'), a
+    trailing 'b' ('134217728b'), single-letter suffixes ('128m', '2.5g')
+    and two-letter ones ('512mb', '128MB'), case-insensitive.  A session
+    reports a conf back in the form it was set, so '128m' must not be
+    read as 128 bytes."""
+    m = _BYTES_RE.fullmatch(str(raw).strip().lower())
+    if m is None:
+        return None
+    return int(float(m.group(1)) * (1 << _BYTES_SHIFT[m.group(2)]))
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, conf: dict[str, str]) -> Iterator[None]:
+    """Set runtime ``conf`` for the body of a ``with`` block, then restore
+    each key's previous value (unset when it had none), also on error."""
+    prev = {k: spark.conf.get(k, None) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def get_session(

@@ -14,6 +14,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import parse_bytes
+
 TABLES: tuple[str, ...] = (
     "region",
     "nation",
@@ -85,17 +87,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         elif isinstance(dt, T.TimestampNTZType):
             df = df.withColumn(c, F.col(c).cast(T.TimestampType()))
     return df
-
-
-_SIZE_SUFFIX = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
-
-
-def _parse_bytes(v: str) -> int:
-    """Parse a Spark byte-size conf value ('134217728', '134217728b', '128m', '128MB')."""
-    s = str(v).strip().lower().removesuffix("b")
-    if s and s[-1] in _SIZE_SUFFIX:
-        return int(float(s[:-1]) * _SIZE_SUFFIX[s[-1]])
-    return int(s)
 
 
 # fan_out width estimates, keyed by (files, confs): repeated load_table
@@ -206,8 +197,8 @@ def fan_out(df: DataFrame, min_factor: int = 2) -> DataFrame:
     files = tuple(df.inputFiles())
     if not files:
         return df  # in-memory/derived source: no scan layout to widen
-    max_bytes = _parse_bytes(spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728"))
-    open_cost = _parse_bytes(spark.conf.get("spark.sql.files.openCostInBytes", "4194304"))
+    max_bytes = parse_bytes(spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728"))
+    open_cost = parse_bytes(spark.conf.get("spark.sql.files.openCostInBytes", "4194304"))
     est = _scan_task_estimate(files, max_bytes, open_cost, target)
     if est is not None and est * min_factor <= target:
         return df.repartition(target)

@@ -194,20 +194,13 @@ def band_first_seen(bands: DataFrame, n_buckets: int | None = None) -> DataFrame
 
     ``n_buckets`` sizes the state grouping (default: 4x the session's
     default parallelism — enough groups to spread over every core with
-    a small per-task multiplicity; env ``SPARK_GRAFT_STREAM_STATE_BUCKETS``
-    overrides).  Bucket count is pure layout: verdicts are computed per
-    band value inside the bucket, so results are bucket-count-invariant."""
-    import os
-
+    a small per-task multiplicity).  Bucket count is pure layout:
+    verdicts are computed per band value inside the bucket, so results
+    are bucket-count-invariant."""
     from pyspark.sql import functions as F
 
     if n_buckets is None:
-        env = os.environ.get("SPARK_GRAFT_STREAM_STATE_BUCKETS")
-        n_buckets = (
-            int(env)
-            if env
-            else 4 * bands.sparkSession.sparkContext.defaultParallelism
-        )
+        n_buckets = 4 * bands.sparkSession.sparkContext.defaultParallelism
     keyed = bands.select(
         "doc_id",
         F.concat_ws(

@@ -247,17 +247,15 @@ def test_clique_chain_like_lsh_bridges():
     assert all(v == 0 for v in history[-1].values())
 
 
-def test_cc_loop_width_invariant_and_conf_restored(spark):
-    """r13 scoped the propagation loop's shuffle width to the edge mass
-    (SPARK_GRAFT_CC_SHUFFLE overrides).  Labels must be identical at
-    width 1 and the session width (min-label algebra is per-key), and
-    the session conf must be restored afterward — including on the
-    unconverged-RuntimeError exit path."""
-    import os
-
+def test_cc_loop_width_invariant_and_conf_restored(spark, monkeypatch):
+    """r13 scoped the propagation loop's shuffle width to the edge mass.
+    Labels must be identical at width 1 and the session width
+    (min-label algebra is per-key), and the session conf must be
+    restored afterward — including on the unconverged-RuntimeError
+    exit path."""
     import pytest
-    from pyspark.sql import functions as F
 
+    from kinesis_to_opensearch_lambda_spark.operators import dedup
     from kinesis_to_opensearch_lambda_spark.operators.dedup import (
         connected_components,
     )
@@ -268,17 +266,14 @@ def test_cc_loop_width_invariant_and_conf_restored(spark):
     )
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     results = {}
-    for w in ("1", "4"):
-        os.environ["SPARK_GRAFT_CC_SHUFFLE"] = w
-        try:
-            results[w] = sorted(
-                tuple(r) for r in connected_components(pairs).collect()
-            )
-        finally:
-            del os.environ["SPARK_GRAFT_CC_SHUFFLE"]
+    for w in (1, 4):
+        monkeypatch.setattr(dedup, "_cc_width", lambda n, session, w=w: w)
+        results[w] = sorted(
+            tuple(r) for r in connected_components(pairs).collect()
+        )
         assert spark.conf.get("spark.sql.shuffle.partitions") == prev
-    assert results["1"] == results["4"]
-    assert {c for _, c in results["1"]} == {1, 10, 20}
+    assert results[1] == results[4]
+    assert {c for _, c in results[1]} == {1, 10, 20}
 
     # conf restored on the error exit too: a 4-chain cannot converge in
     # one round even with the jump term (the tail is 3 hops from the min)

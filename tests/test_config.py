@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import base64
 import json
+import re
+from pathlib import Path
 
 from kinesis_to_opensearch_lambda_spark.config import EngineConfig, decode_secret
 
@@ -66,3 +68,48 @@ def test_generic_user_password_fallback_still_works():
     )
     assert cfg.auth_mode == "basic"
     assert cfg.auth_user == "svc"
+
+
+# Deployment settings (paths, cores, memory) are the only environment
+# the engine reads besides config.py's reference surface; execution
+# layout is derived from the input, never set by a tuning variable.
+DEPLOYMENT_ENV = {
+    "SPARK_GRAFT_CPUS",
+    "SPARK_GRAFT_SF_DIR",
+    "SPARK_GRAFT_CHECKPOINT_DIR",
+    "SPARK_DRIVER_MEMORY",
+    "SPARK_GRAFT_MAX_RESULT_SIZE",
+}
+REFERENCE_ENV = {"es_endpoint", "index_prefix"}  # lambda_function.py:57-59
+
+
+# An environment read: os.environ.get(KEY / os.environ[KEY / os.getenv(KEY;
+# KEY is a string literal or a module-level string constant.  A bare
+# `os.environ` (the whole mapping) captures an empty key.
+_ENV_READ = re.compile(r'\b(?:environ\.get\(|environ\[|getenv\(|environ\b)\s*("\w*"|\w*)')
+
+
+def test_env_reads_are_deployment_settings_only():
+    """Knob-creep guard: every environment read in the package names a
+    deployment setting.  config.py alone takes the whole environment,
+    and reads only the reference's own keys from it."""
+    import kinesis_to_opensearch_lambda_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    found, bad = set(), []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        src = path.read_text()
+        consts = dict(re.findall(r'^(\w+) = "(\w+)"$', src, re.M))
+        for m in _ENV_READ.finditer(src):
+            name = consts.get(m.group(1), m.group(1).strip('"'))
+            if name in DEPLOYMENT_ENV:
+                found.add(name)
+            elif not (name == "" and rel == "config.py"):
+                line = src.count("\n", 0, m.start()) + 1
+                bad.append(f"{rel}:{line} reads {name or 'the whole environment'}")
+    assert not bad, bad
+    assert found == DEPLOYMENT_ENV  # the scan sees every allowed read
+    config = (root / "config.py").read_text()
+    config_keys = set(re.findall(r'\benv\.get\("(\w+)"', config))
+    assert config_keys == REFERENCE_ENV

@@ -65,12 +65,13 @@ def test_empty_env_var_means_local(spark, monkeypatch):
 # are now guarded by the source scan's bytes vs an executor-heap
 # budget, and a reliable checkpoint dir (disk, not heap) always cuts.
 
+from kinesis_to_opensearch_lambda_spark.operators import lineage  # noqa: E402
 from kinesis_to_opensearch_lambda_spark.operators.lineage import (  # noqa: E402
-    _CUT_BUDGET_ENV,
-    _SER_BUDGET_ENV,
-    _parse_mem,
+    _heap_bytes,
+    _scan_bytes,
     truncate_lineage_scaled,
 )
+from kinesis_to_opensearch_lambda_spark.session import parse_bytes  # noqa: E402
 
 
 def _parquet_df(spark, tmp_path):
@@ -79,9 +80,15 @@ def _parquet_df(spark, tmp_path):
     return spark.read.parquet(p)
 
 
+def _pin_heap(monkeypatch, heap: int) -> None:
+    """Both cut budgets derive from the executor heap: the deserialized
+    tier admits scans <= heap*3/(64*live_cuts), the serialized <= heap."""
+    monkeypatch.setattr(lineage, "_heap_bytes", lambda df: heap)
+
+
 def test_scaled_cut_fires_under_budget(spark, tmp_path, monkeypatch):
     monkeypatch.delenv(CHECKPOINT_DIR_ENV, raising=False)
-    monkeypatch.setenv(_CUT_BUDGET_ENV, "10240")  # 10 GiB: tiny file fits
+    _pin_heap(monkeypatch, 16 << 30)  # deser budget 256 MiB: tiny file fits
     src = _parquet_df(spark, tmp_path)
     out = truncate_lineage_scaled(src.selectExpr("id * 2 AS v"), None, source=src)
     assert out is not src
@@ -95,9 +102,8 @@ def test_scaled_cut_over_deser_budget_cuts_serialized(spark, tmp_path, monkeypat
     # the cut still fires — with MEMORY_AND_DISK_SER blocks (compact,
     # disk-spilling) instead of deserialized row objects.
     monkeypatch.delenv(CHECKPOINT_DIR_ENV, raising=False)
-    monkeypatch.setenv(_CUT_BUDGET_ENV, "0.000001")  # ~1 byte: deser never fits
-    monkeypatch.delenv(_SER_BUDGET_ENV, raising=False)  # default: heap
     src = _parquet_df(spark, tmp_path)
+    _pin_heap(monkeypatch, 2 * _scan_bytes(src))  # deser never fits, ser does
     derived = src.selectExpr("id * 2 AS v")
     out = truncate_lineage_scaled(derived, None, source=src, eager=True)
     assert out is not derived
@@ -112,8 +118,7 @@ def test_scaled_cut_over_deser_budget_cuts_serialized(spark, tmp_path, monkeypat
 
 def test_scaled_cut_lapses_over_both_budgets(spark, tmp_path, monkeypatch):
     monkeypatch.delenv(CHECKPOINT_DIR_ENV, raising=False)
-    monkeypatch.setenv(_CUT_BUDGET_ENV, "0.000001")  # ~1 byte: nothing fits
-    monkeypatch.setenv(_SER_BUDGET_ENV, "0.000001")
+    _pin_heap(monkeypatch, 1)  # ~1 byte: nothing fits
     src = _parquet_df(spark, tmp_path)
     derived = src.selectExpr("id * 2 AS v")
     out = truncate_lineage_scaled(derived, None, source=src)
@@ -127,9 +132,8 @@ def test_scaled_cut_serialized_tier_opt_out(spark, tmp_path, monkeypatch):
     # references are already deduped by runtime exchange reuse (BFS
     # und / random-walk indexed, measured 2x slower serialized at sf10).
     monkeypatch.delenv(CHECKPOINT_DIR_ENV, raising=False)
-    monkeypatch.setenv(_CUT_BUDGET_ENV, "0.000001")
-    monkeypatch.delenv(_SER_BUDGET_ENV, raising=False)
     src = _parquet_df(spark, tmp_path)
+    _pin_heap(monkeypatch, 2 * _scan_bytes(src))  # deser never fits, ser does
     derived = src.selectExpr("id * 2 AS v")
     out = truncate_lineage_scaled(
         derived, None, source=src, serialized_tier=False
@@ -138,39 +142,67 @@ def test_scaled_cut_serialized_tier_opt_out(spark, tmp_path, monkeypatch):
 
 
 def test_scaled_cut_live_cuts_derates_budget(spark, tmp_path, monkeypatch):
-    # With the serialized tier pinned shut, an absurd live-cut count
-    # shrinks the per-cut deserialized budget to ~0 → uncut; the
-    # default count keeps the tiny file well under budget → cut.
+    # With the serialized tier shut, an absurd live-cut count shrinks
+    # the per-cut deserialized budget to ~0 → uncut; the default count
+    # keeps the tiny file well under budget → cut.
     monkeypatch.delenv(CHECKPOINT_DIR_ENV, raising=False)
-    monkeypatch.delenv(_CUT_BUDGET_ENV, raising=False)
-    monkeypatch.setenv(_SER_BUDGET_ENV, "0.000001")
+    _pin_heap(monkeypatch, 1 << 30)
     src = _parquet_df(spark, tmp_path)
     derived = src.selectExpr("id * 2 AS v")
     assert (
-        truncate_lineage_scaled(derived, None, source=src, live_cuts=10**9)
+        truncate_lineage_scaled(
+            derived, None, source=src, live_cuts=10**9, serialized_tier=False
+        )
         is derived
     )
     assert (
-        truncate_lineage_scaled(derived, None, source=src, live_cuts=3)
+        truncate_lineage_scaled(
+            derived, None, source=src, live_cuts=3, serialized_tier=False
+        )
         is not derived
     )
 
 
-def test_parse_mem_accepts_spark_forms_and_degrades():
-    assert _parse_mem("16g") == 16 * (1 << 30)
-    assert _parse_mem("512mb") == 512 * (1 << 20)
-    assert _parse_mem("16GB") == 16 * (1 << 30)
-    assert _parse_mem("1tb") == 1 << 40
-    assert _parse_mem("1073741824") == 1 << 30
-    assert _parse_mem("2.5g") == int(2.5 * (1 << 30))
-    assert _parse_mem("watermelon") is None
-    assert _parse_mem("") is None
+def test_parse_bytes_accepts_spark_forms_and_degrades():
+    assert parse_bytes("16g") == 16 * (1 << 30)
+    assert parse_bytes("512mb") == 512 * (1 << 20)
+    assert parse_bytes("16GB") == 16 * (1 << 30)
+    assert parse_bytes("1tb") == 1 << 40
+    assert parse_bytes("1073741824") == 1 << 30
+    assert parse_bytes("134217728b") == 128 << 20
+    assert parse_bytes("128m") == 128 << 20
+    assert parse_bytes("128MB") == 128 << 20
+    assert parse_bytes("2.5g") == int(2.5 * (1 << 30))
+    assert parse_bytes("watermelon") is None
+    assert parse_bytes("") is None
+
+
+def test_heap_bytes_local_cluster_uses_executor_memory():
+    # local-cluster[...] runs separate executor JVMs: the cut budget must
+    # come from the executor heap, not the driver's (only local and
+    # local[N] share one JVM).
+    from types import SimpleNamespace
+
+    from pyspark import SparkConf
+
+    def stub(master: str):
+        conf = (
+            SparkConf(loadDefaults=False)
+            .set("spark.master", master)
+            .set("spark.driver.memory", "4g")
+            .set("spark.executor.memory", "1g")
+        )
+        sc = SimpleNamespace(getConf=lambda: conf)
+        return SimpleNamespace(sparkSession=SimpleNamespace(sparkContext=sc))
+
+    assert _heap_bytes(stub("local-cluster[2,1,1024]")) == 1 << 30
+    assert _heap_bytes(stub("local[4]")) == 4 << 30
+    assert _heap_bytes(stub("local")) == 4 << 30
 
 
 def test_scaled_cut_unknown_source_fails_safe(spark, monkeypatch):
     # a derived/in-memory source exposes no files: treat as over budget
     monkeypatch.delenv(CHECKPOINT_DIR_ENV, raising=False)
-    monkeypatch.delenv(_CUT_BUDGET_ENV, raising=False)
     src = spark.range(10)
     derived = src.selectExpr("id + 1 AS v")
     out = truncate_lineage_scaled(derived, None, source=src)
@@ -180,7 +212,7 @@ def test_scaled_cut_unknown_source_fails_safe(spark, monkeypatch):
 def test_scaled_cut_reliable_dir_always_cuts(spark, tmp_path, monkeypatch):
     # over-budget locally, but a reliable dir stores blocks on disk,
     # not executor heap — the cluster deployment path always cuts
-    monkeypatch.setenv(_CUT_BUDGET_ENV, "0.000001")
+    _pin_heap(monkeypatch, 1)
     ckpt = str(tmp_path / "reliable")
     monkeypatch.setenv(CHECKPOINT_DIR_ENV, ckpt)
     src = _parquet_df(spark, tmp_path)

@@ -334,66 +334,99 @@ def test_streaming_dedup_minhash_semantics(spark):
 
 
 def test_stream_codegen_mode_scoping_and_invariance(spark, tmp_path, monkeypatch):
-    """r13: _stream_codegen_mode flips factoryMode to NO_CODEGEN only
-    for a sub-64MB micro-batch source (the 4,330-word HLL buffer's
-    projection-source regeneration dominates small drains), honors the
-    env pin, restores the session value on exit — and the HLL drain's
-    rows are identical in both modes (projection mode is execution
-    strategy, never semantics)."""
+    """r13: the drain conf flips factoryMode to NO_CODEGEN only for a
+    sub-64MB micro-batch source (the 4,330-word HLL buffer's
+    projection-source regeneration dominates small drains), the scope
+    restores the session value on exit — and the HLL drain's rows are
+    identical in both modes (projection mode is execution strategy,
+    never semantics)."""
     from kinesis_to_opensearch_lambda_spark.queries import REGISTRY
-    from kinesis_to_opensearch_lambda_spark.operators.streaming_queries import (
-        _stream_codegen_mode,
-    )
+    from kinesis_to_opensearch_lambda_spark.operators import streaming_queries as SQ
+    from kinesis_to_opensearch_lambda_spark.session import scoped_conf
 
     prev = spark.conf.get("spark.sql.codegen.factoryMode", "FALLBACK")
     small = tmp_path / "src"
     small.mkdir()
     (small / "b0.parquet").write_bytes(b"x" * 1024)
-    with _stream_codegen_mode(spark, str(small)) as m:
-        assert m.mode == "NO_CODEGEN"
+    conf = SQ._drain_conf(spark, str(small), codegen=True)
+    assert conf == {
+        "spark.sql.shuffle.partitions": "1",
+        "spark.sql.codegen.factoryMode": "NO_CODEGEN",
+    }
+    with scoped_conf(spark, conf):
         assert spark.conf.get("spark.sql.codegen.factoryMode") == "NO_CODEGEN"
     assert spark.conf.get("spark.sql.codegen.factoryMode", "FALLBACK") == prev
-
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_CODEGEN", "CODEGEN_ONLY")
-    with _stream_codegen_mode(spark, str(small)) as m:
-        assert m.mode == "CODEGEN_ONLY"
-    assert spark.conf.get("spark.sql.codegen.factoryMode", "FALLBACK") == prev
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_CODEGEN")
+    assert SQ._codegen_mode(64 << 20, "FALLBACK") == "FALLBACK"
 
     sf_dir = "/root/testdata/sf0.001"
     build = REGISTRY["streaming_sketch_distinct"].spark
 
     def rows(mode: str):
-        monkeypatch.setenv("SPARK_GRAFT_STREAM_CODEGEN", mode)
-        try:
-            return sorted(map(tuple, build(spark, sf_dir).collect()))
-        finally:
-            monkeypatch.delenv("SPARK_GRAFT_STREAM_CODEGEN")
+        monkeypatch.setattr(SQ, "_codegen_mode", lambda total, session: mode)
+        return sorted(map(tuple, build(spark, sf_dir).collect()))
 
     assert rows("NO_CODEGEN") == rows("FALLBACK")
+    assert spark.conf.get("spark.sql.codegen.factoryMode", "FALLBACK") == prev
 
 
-def test_stream_shuffle_width_explicit_width(spark, tmp_path, monkeypatch):
+def test_stream_shuffle_width_explicit_width(spark, tmp_path):
     """r13: the stream-stream join derives its width from candidate-pair
-    mass and passes it explicitly; the scope must clamp it to [1,
-    session width], let the env pin win, and restore the session conf."""
+    mass and passes it explicitly; the drain conf must clamp it to [1,
+    session width] and the scope must restore the session conf."""
     # registry first: importing streaming_queries directly would
     # re-enter the queries<->operators import cycle half-initialized
     from kinesis_to_opensearch_lambda_spark.queries import REGISTRY  # noqa: F401
     from kinesis_to_opensearch_lambda_spark.operators.streaming_queries import (
-        _stream_shuffle_width,
+        _drain_conf,
     )
+    from kinesis_to_opensearch_lambda_spark.session import scoped_conf
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    with _stream_shuffle_width(spark, str(tmp_path), width=6) as w:
-        assert w.width == min(6, int(prev))
-        assert spark.conf.get("spark.sql.shuffle.partitions") == str(w.width)
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
-    with _stream_shuffle_width(spark, str(tmp_path), width=10**9) as w:
-        assert w.width == int(prev)  # clamped to the session width
-    with _stream_shuffle_width(spark, str(tmp_path), width=0) as w:
-        assert w.width == 1  # floor
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE", "3")
-    with _stream_shuffle_width(spark, str(tmp_path), width=7) as w:
-        assert w.width == 3  # env pin beats the derived width
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+    key = "spark.sql.shuffle.partitions"
+
+    def width(w: int) -> int:
+        return int(_drain_conf(spark, str(tmp_path), width=w)[key])
+
+    prev = spark.conf.get(key)
+    conf = _drain_conf(spark, str(tmp_path), width=6)
+    assert conf == {key: str(min(6, int(prev)))}
+    with scoped_conf(spark, conf):
+        assert spark.conf.get(key) == conf[key]
+    assert spark.conf.get(key) == prev
+    assert width(10**9) == int(prev)  # clamped to the session width
+    assert width(0) == 1  # floor
+    with pytest.raises(RuntimeError, match="boom"):
+        with scoped_conf(spark, _drain_conf(spark, str(tmp_path), width=7)):
+            raise RuntimeError("boom")
+    assert spark.conf.get(key) == prev
+
+
+def test_stream_scan_split_reads_spark_byte_strings(spark, tmp_path):
+    """The scan split parses the session's maxPartitionBytes as a Spark
+    byte string: a session value of '128m' is 128 MiB, not 128 bytes,
+    so the derived split equals the one at the default session value
+    (the 1 MiB floor for a 4 KB source) — and the scope restores the
+    session's own spelling afterwards."""
+    from kinesis_to_opensearch_lambda_spark.queries import REGISTRY  # noqa: F401
+    from kinesis_to_opensearch_lambda_spark.operators.streaming_queries import (
+        _drain_conf,
+    )
+    from kinesis_to_opensearch_lambda_spark.session import scoped_conf
+
+    key = "spark.sql.files.maxPartitionBytes"
+    (tmp_path / "b0.parquet").write_bytes(b"x" * 4096)
+    prev = spark.conf.get(key, None)
+    default = _drain_conf(spark, str(tmp_path), n_batches=3)
+    assert default == {"spark.sql.shuffle.partitions": "1", key: str(1 << 20)}
+    spark.conf.set(key, "128m")
+    try:
+        conf = _drain_conf(spark, str(tmp_path), n_batches=3)
+        assert int(conf[key]) >= 1 << 20
+        assert conf == default
+        with scoped_conf(spark, conf):
+            assert spark.conf.get(key) == conf[key]
+        assert spark.conf.get(key) == "128m"
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
